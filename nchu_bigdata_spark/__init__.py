@@ -10,6 +10,7 @@ Pandas UDFs only where built-ins can't express the semantics.
 
 Layout:
     session     SparkSession builder (AQE, Arrow, UTC, tuned shuffle)
+                and the per-query child session (query_session)
     io          schemas + readers for the testdata tables
     registry    query registry consumed by __spark_entry__.py
     queries/    relational core, scalar fns, UDF surface, streaming-batch

@@ -143,10 +143,11 @@ def read_events_parquet(spark: SparkSession, path: str) -> DataFrame:
     design: (a) later ``table('events')`` calls in the same session see
     ts as BIGINT nanos on the *first* read attempt — ``table`` branches
     on the actual dtype and normalizes, so results are unchanged;
-    (b) an unrelated TIMESTAMP(NANOS) parquet read by an external
-    caller will surface BIGINT — callers doing their own nanos reads
-    should re-pin the conf per query. On modern Spark (4.x) the native
-    read succeeds and this branch never triggers."""
+    (b) an unrelated TIMESTAMP(NANOS) parquet read in the same session
+    will surface BIGINT. Registered queries and the streaming runners
+    read through their own child session (``session.query_session``),
+    so there the flag never reaches the caller. On modern Spark (4.x)
+    the native read succeeds and this branch never triggers."""
     try:
         return spark.read.parquet(path)
     except Exception:
@@ -172,16 +173,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``nanosAsLong``), as TIMESTAMP_NTZ (Spark 4.x native nanos read,
     truncated to micros), or already as a session-TZ timestamp. The
     branch below normalizes every case to a microsecond TimestampType on
-    the UTC session clock, so downstream window/date logic and the
-    DuckDB oracle agree regardless of which session constructed the
-    read (the testdata carries no sub-microsecond components, so all
-    paths are lossless and identical)."""
+    the session clock — UTC in every query session
+    (``session.query_session``) and in ``get_session`` — so downstream
+    window/date logic and the DuckDB oracle agree (the testdata carries
+    no sub-microsecond components, so all paths are lossless and
+    identical)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; one of {TABLES}")
-    # Queries may run under a caller-provided session (the driver's);
-    # pin the TZ-sensitive semantics here so results don't depend on the
-    # host machine's timezone (to_date/year/window of timestamp cols).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         from pyspark.sql import functions as F
@@ -385,13 +383,3 @@ def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
     )
     pdf = pd.DataFrame(list(rows), columns=st.names)
     return spark.createDataFrame(pdf, schema=st)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for ``spark.sql`` queries."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

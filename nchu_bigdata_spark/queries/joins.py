@@ -603,10 +603,10 @@ def join_range_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At test scale the exploded interval side sits under the broadcast
     threshold, so the query disables auto-broadcast FOR ITSELF to
-    demonstrate the big-big exchange it exists for (precedent and
-    restore mechanics: `join_bloom_prune` — the registry wrapper
-    re-pins plan confs on entry to every other query). Results are
-    conf-independent.
+    demonstrate the big-big exchange it exists for (precedent:
+    `join_bloom_prune` — the override lives on the query's own session,
+    ``session.query_session``, and reaches no other query). Results
+    are conf-independent.
 
     Skew note: a hot 128 s cell (traffic spike) is a plain equi-join
     skew problem — AQE skew-join splits it; no bespoke salting layer.

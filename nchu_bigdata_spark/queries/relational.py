@@ -45,24 +45,17 @@ def _write_one_file_per_bucket(
     ADVICE r13 item 2: spark.sql.files.maxRecordsPerFile (session
     config, user override) silently splits files and restarts
     _metadata.row_index per file, landing deletes on wrong rows — so
-    the conf is pinned to 0 (no split) around the write and the
-    produced layout is asserted before any reader trusts ordinals."""
-    key = "spark.sql.files.maxRecordsPerFile"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "0")
-    try:
-        (
-            df.repartition("bucket")
-            .sortWithinPartitions("bucket", *sort_cols)
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(out)
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    the conf is set to 0 (no split) on the query's own session
+    (``session.query_session``) and the produced layout is asserted
+    before any reader trusts ordinals."""
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "0")
+    (
+        df.repartition("bucket")
+        .sortWithinPartitions("bucket", *sort_cols)
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(out)
+    )
     for bucket_dir in sorted(glob.glob(os.path.join(out, "bucket=*"))):
         n_files = len(glob.glob(os.path.join(bucket_dir, "part-*.parquet")))
         if n_files != 1:
@@ -486,8 +479,10 @@ def scan_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Column-pruned CSV parsing never SEES the malformed field, so
     # _corrupt_record would stay null (the classic PERMISSIVE gotcha).
-    # Disable pruning for this query; the registry wrapper re-pins the
-    # default before every other query (session.PLAN_CONF_PINS).
+    # Disable pruning for this query; the override lives on the query's
+    # own session (session.query_session), so it holds through the lazy
+    # CSV parse whenever the caller executes it, and reaches no other
+    # query.
     spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
     parsed = (
         spark.read.schema(schema)
@@ -495,7 +490,7 @@ def scan_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(out)
     )
-    result = (
+    return (
         parsed.select(
             F.when(
                 F.col("_corrupt_record").isNotNull(), F.lit("<corrupt>")
@@ -512,14 +507,6 @@ def scan_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("chars").cast("long").alias("sum_chars"),
         )
     )
-    # Materialize while the pruning override is still active (ADVICE
-    # r7): the returned DataFrame is LAZY, and the registry wrapper
-    # re-pins columnPruning=true before the next query — if a caller
-    # executed this plan after that, one-token bad lines would parse as
-    # null-lang "good" rows and silently diverge from the oracle.
-    # localCheckpoint(eager) runs the CSV parse NOW, under the
-    # override, and pins the tiny per-lang aggregate.
-    return result.localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -1229,10 +1216,10 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan/scale: both writes are partitioned sinks (dir-per-flag); the
     dynamic overwrite's commit only touches the partitions the batch
     contains — at 100 TB the refresh rewrites one day's directory,
-    never the table. The conf is set per-query; the registry wrapper
-    re-pins defaults afterward, and the result is MATERIALIZED before
-    return so the override can't leak into lazy execution
-    (scan_csv_corrupt's ADVICE-r7 rule)."""
+    never the table. The overwrite mode is set on the query's own
+    session (``session.query_session``), so it never reaches the
+    caller; both writes run eagerly here, and the lazy read-back does
+    not depend on it."""
     out = scratch_dir(sf_dir, "lineitem_dyn_overwrite")
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
@@ -1254,7 +1241,7 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     batch.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-    back = (
+    return (
         spark.read.parquet(out)
         .groupBy("l_returnflag")
         .agg(
@@ -1262,11 +1249,6 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("marker").cast("long").alias("marker_sum"),
         )
     )
-    # materialize while the dynamic-mode conf is live (the override
-    # must not depend on surviving until the caller collects)
-    back = back.localCheckpoint(eager=True)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    return back
 
 
 # --------------------------------------------------------------------------

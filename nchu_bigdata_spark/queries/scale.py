@@ -235,10 +235,9 @@ def join_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark then (correctly) skips bloom injection — a BHJ already
     prunes at the hash table. To demonstrate the big-big case the
     query disables auto-broadcast and widens the bloom thresholds FOR
-    ITSELF; these are plan-choice confs that must stay overridden
-    through this query's own lazy execution, so the registry wrapper —
-    not this function — restores the defaults on entry to every other
-    query (see ``register.final_fn``). Results are conf-independent:
+    ITSELF, on its own query session (``session.query_session``): the
+    overrides hold through this query's lazy execution and never reach
+    the caller or any other query. Results are conf-independent:
     the bloom filter is a pure may-contain reduction, never a
     semantic change."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -402,9 +401,9 @@ def join_aqe_runtime_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     (threshold -1) while the ADAPTIVE threshold stays permissive, so
     the initial plan MUST be SMJ and the final plan MUST be the
     runtime-converted BHJ — both asserted by test on the two plan
-    sections; the registry wrapper re-pins the session defaults before
-    the next query, bounding the override's blast radius (the
-    join_bloom_prune pattern).
+    sections; both thresholds are set on the query's own session
+    (``session.query_session``), so the override reaches no other
+    query (the join_bloom_prune pattern).
 
     Plan/scale: the replanned query reads lineitem once with the
     broadcast probe (no fact shuffle at all once converted — the SMJ

@@ -202,8 +202,9 @@ def sort_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = orders.select(
         (F.col("o_custkey") % (1 << _Z_BITS)).alias("xk"),
         (
-            # o_orderdate surfaces as TIMESTAMP_NTZ; the UTC-pinned
-            # session clock (registry wrapper) makes the cast exact
+            # o_orderdate surfaces as TIMESTAMP_NTZ; the query
+            # session's UTC clock (session.query_session) makes the
+            # cast exact
             F.expr(
                 "(unix_micros(cast(o_orderdate as timestamp)) DIV 86400000000)"
             )

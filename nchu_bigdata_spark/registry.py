@@ -19,6 +19,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nchu_bigdata_spark.session import query_session
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -53,31 +55,11 @@ def register(
         from nchu_bigdata_spark.compat import finalize_oracle, finalize_output
 
         def final_fn(spark: SparkSession, sf_dir: str, _fn: QueryFn = fn) -> DataFrame:
-            # Queries run under caller-owned sessions (the driver's);
-            # pin the runtime confs that change result SEMANTICS so
-            # behavior can't drift with the caller's defaults: UTC
-            # session clock (timestamp bucketing/formatting), ANSI off
-            # (permissive casts, matching both the reference's
-            # Double.parseDouble semantics and the DuckDB oracles as
-            # written), Arrow on (the pandas-UDF operators assume
-            # vectorized transfer).
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            spark.conf.set("spark.sql.ansi.enabled", "false")
-            spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-            # Plan-choice confs, re-pinned to the engine's declared
-            # values (session.PLAN_CONF_PINS — the same single source
-            # get_session builds with): a query that overrides them for
-            # its own demonstration (e.g. join_bloom_prune disables
-            # broadcast so the runtime bloom filter can inject) must
-            # stay overridden through its OWN lazy execution, so it
-            # can't restore them itself — instead every query entry
-            # re-pins, bounding any override's blast radius to exactly
-            # one query.
-            from nchu_bigdata_spark.session import PLAN_CONF_PINS
-
-            for k, v in PLAN_CONF_PINS.items():
-                spark.conf.set(k, v)
-            return finalize_output(_fn(spark, sf_dir))
+            # Queries run under caller-owned sessions (the driver's):
+            # each runs in its own pinned child session, so results
+            # can't drift with the caller's defaults and nothing the
+            # query sets reaches the caller (session.query_session).
+            return finalize_output(_fn(query_session(spark), sf_dir))
 
         final_fn.__name__ = fn.__name__
         final_fn.__doc__ = fn.__doc__
@@ -129,59 +111,8 @@ def register(
 # moves the greens to the tail (the r9 unrotated-window incident is
 # the reason this is a tool, not a convention).
 DRIVER_ORDER = [
-    # rotated by tools/rotate_ledger.py after round 14: 50 green ids moved to the tail
-    # -- ROTATION LEDGER window r15: first 50 ids below (stuck ids from r14 lead) --
-    "text_repetition",  # r5
-    "kmeans_assign",  # r5
-    "tpch_q3",  # r5
-    "tpch_q6",  # r5
-    "udf_scalar_pandas",  # r5
-    "join_cross_argmin",  # r5
-    "fn_math",  # r5
-    "fn_array",  # r5
-    "scan_csv",  # r5
-    "scan_orc",  # r5
-    "sink_partitioned",  # r5
-    "project_select",  # r5
-    "scan_parquet",  # r5
-    "filter_pred",  # r5
-    "lateral_explode",  # r5
-    "sample_hash",  # r5
-    "join_broadcast",  # r5
-    "join_semi",  # r5
-    "join_anti",  # r5
-    "sort_limit",  # r5
-    "topk_per_group",  # r5
-    "set_union",  # r5
-    "set_intersect",  # r5
-    "set_except",  # r5
-    "fn_string",  # r5
-    "fn_date",  # r5
-    "sub_exists",  # r5
-    "sub_scalar",  # r5
-    "sub_in",  # r5
-    "dedup_ngram_jaccard",  # r6
-    "events_retention",  # r6
-    "sub_recursive",  # r6
-    "kmeans_fit",  # r6
-    "multimodal_decode",  # r6
-    "sim_topk",  # r6
-    "agg_hash",  # r6
-    "stream_sliding",  # r6
-    "stream_stream_join",  # r6
-    "multimodal_decode_meta",  # r6
-    "tpch_q5",  # r6
-    "join_dpp",  # r6
-    "win_argmin",  # r6
-    "udtf_apply_in_pandas",  # r6
-    "text_tokenize_tfidf",  # r6
-    "join_asof",  # r6
-    "scan_json",  # r6
-    "fn_json",  # r6
-    "stream_session",  # r6
-    "stream_dedup",  # r6
-    "stream_stateful",  # r6
-    # -- ids beyond the r15 window: consumed head-first, 50/round --
+    # rotated by tools/rotate_ledger.py after round 15: 50 green ids moved to the tail
+    # -- ROTATION LEDGER window r16: first 50 ids below (stuck ids from r15 lead) --
     "stream_watermark_late",  # r6
     "stream_tumbling",  # r6
     "agg_distinct",  # r6
@@ -232,6 +163,7 @@ DRIVER_ORDER = [
     "text_bpe_pairs",  # r7
     "events_anomaly",  # r7
     "graph_pagerank",  # r7
+    # -- ids beyond the r16 window: consumed head-first, 50/round --
     "graph_triangles",  # r7
     "scan_text",  # r7
     "sample_reservoir",  # r7
@@ -555,6 +487,56 @@ DRIVER_ORDER = [
     "pack_sequences",  # r14
     "curate_corpus",  # r14
     "sample_stratified",  # r14
+    "text_repetition",  # r15
+    "kmeans_assign",  # r15
+    "tpch_q3",  # r15
+    "tpch_q6",  # r15
+    "udf_scalar_pandas",  # r15
+    "join_cross_argmin",  # r15
+    "fn_math",  # r15
+    "fn_array",  # r15
+    "scan_csv",  # r15
+    "scan_orc",  # r15
+    "sink_partitioned",  # r15
+    "project_select",  # r15
+    "scan_parquet",  # r15
+    "filter_pred",  # r15
+    "lateral_explode",  # r15
+    "sample_hash",  # r15
+    "join_broadcast",  # r15
+    "join_semi",  # r15
+    "join_anti",  # r15
+    "sort_limit",  # r15
+    "topk_per_group",  # r15
+    "set_union",  # r15
+    "set_intersect",  # r15
+    "set_except",  # r15
+    "fn_string",  # r15
+    "fn_date",  # r15
+    "sub_exists",  # r15
+    "sub_scalar",  # r15
+    "sub_in",  # r15
+    "dedup_ngram_jaccard",  # r15
+    "events_retention",  # r15
+    "sub_recursive",  # r15
+    "kmeans_fit",  # r15
+    "multimodal_decode",  # r15
+    "sim_topk",  # r15
+    "agg_hash",  # r15
+    "stream_sliding",  # r15
+    "stream_stream_join",  # r15
+    "multimodal_decode_meta",  # r15
+    "tpch_q5",  # r15
+    "join_dpp",  # r15
+    "win_argmin",  # r15
+    "udtf_apply_in_pandas",  # r15
+    "text_tokenize_tfidf",  # r15
+    "join_asof",  # r15
+    "scan_json",  # r15
+    "fn_json",  # r15
+    "stream_session",  # r15
+    "stream_dedup",  # r15
+    "stream_stateful",  # r15
 ]
 
 

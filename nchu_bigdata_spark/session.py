@@ -2,7 +2,8 @@
 
 One place to pin every config that matters for correctness (UTC
 timestamps for oracle comparison, ANSI off to match reference semantics)
-and for scale (AQE on, Arrow on, shuffle partitions sized to cores).
+and for scale (AQE on, Arrow on, shuffle partitions sized to cores), and
+the one way a query scopes its conf: :func:`query_session`.
 
 At 100 TB the same code runs unchanged on a real cluster: only
 ``master``/memory/partition counts move to spark-submit conf. Nothing in
@@ -19,26 +20,51 @@ from pyspark.sql import SparkSession
 # local[$SPARK_GRAFT_CPUS]; default to all cores.
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
-# Plan-choice confs with ONE source of truth: pinned here at session
-# build and re-pinned by the registry wrapper on entry to every
-# registered query (registry.final_fn), so a query that overrides them
-# for its own demonstration (join_bloom_prune disables auto-broadcast
-# to force the big-big runtime-filter path) cannot leak plans into the
-# next query — and the re-pin restores the ENGINE's declared values,
-# never a hardcoded Spark default that would silently clobber this
-# module's deliberate 64MB broadcast threshold.
-PLAN_CONF_PINS = {
+# Runtime confs every registered query runs under, with ONE source of
+# truth: get_session builds with them and query_session sets them on the
+# per-query child session. Semantic confs first — UTC session clock
+# (timestamp bucketing/formatting; DuckDB timestamps are UTC-naive),
+# ANSI off (permissive casts, matching the reference's
+# Double.parseDouble path, src/Kmeans.java:67-68, and the DuckDB
+# oracles as written), Arrow on (the pandas-UDF operators and
+# io.local_rows assume vectorized transfer) — then plan-choice confs at
+# the ENGINE's declared values, never a hardcoded Spark default, so the
+# deliberate 64MB broadcast threshold holds whatever the caller set.
+QUERY_CONF_PINS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.ansi.enabled": "false",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10MB",
     "spark.sql.optimizer.runtime.bloomFilter."
     "applicationSideScanSizeThreshold": "10GB",
     # Default TRUE (parse only needed CSV columns). scan_csv_corrupt
-    # overrides to false for its own run — pruned parsing never sees
-    # the malformed field, so _corrupt_record stays null (the classic
-    # PERMISSIVE gotcha); pinning here bounds that override to one
-    # query, like the bloom-filter pins above.
+    # overrides to false on its own query session — pruned parsing
+    # never sees the malformed field, so _corrupt_record stays null
+    # (the classic PERMISSIVE gotcha).
     "spark.sql.csv.parser.columnPruning.enabled": "true",
 }
+
+
+def query_session(spark: SparkSession) -> SparkSession:
+    """The child session one query runs in: a clone of ``spark`` with
+    :data:`QUERY_CONF_PINS` set on it.
+
+    A clone has its own runtime conf, temp views and functions over the
+    caller's SparkContext and shared state (cache manager, block store),
+    so freezes and caches still work while nothing the query sets —
+    pins, per-query overrides such as join_bloom_prune's disabled
+    broadcast, temp views, UDTFs — reaches the caller. The query's
+    DataFrame keeps its own session, so overrides hold through its lazy
+    execution, whenever the caller runs it. ``cloneSession`` rather
+    than ``newSession``: the clone inherits the caller's runtime tuning
+    (shuffle partitions, codegen, plan-string limits), so a caller's
+    deliberate settings still reach every conf the engine does not
+    pin."""
+    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for k, v in QUERY_CONF_PINS.items():
+        child.conf.set(k, v)
+    return child
 
 
 def get_session(
@@ -49,10 +75,8 @@ def get_session(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    Correctness-critical configs:
-      * ``spark.sql.session.timeZone=UTC`` — Spark timestamps are
-        session-TZ-relative; DuckDB's are UTC-naive. Pinning UTC makes
-        oracle comparison deterministic.
+    Correctness-critical configs: :data:`QUERY_CONF_PINS` (UTC session
+    clock, ANSI off, Arrow on, the plan-choice pins).
     Scale-critical configs:
       * AQE + partition coalescing + skew-join: runtime re-planning is the
         first line of defense against skewed keys at 100 TB.
@@ -70,17 +94,11 @@ def get_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # Reference parity: Hadoop job had no ANSI mode; keep Spark's
-        # permissive casts so 0-as-missing flows like the reference's
-        # Double.parseDouble path (src/Kmeans.java:67-68).
-        .config("spark.sql.ansi.enabled", "false")
     )
-    for k, v in PLAN_CONF_PINS.items():
+    for k, v in QUERY_CONF_PINS.items():
         builder = builder.config(k, v)
     if extra_conf:
         for k, v in extra_conf.items():

@@ -39,6 +39,7 @@ from nchu_bigdata_spark.queries.streaming_batch import (
     tumbling_transform,
     watermark_transform,
 )
+from nchu_bigdata_spark.session import query_session
 
 # Parquet stores events.ts as TIMESTAMP(NANOS); how a session surfaces
 # it varies (raw int64 nanos under legacy nanosAsLong, TIMESTAMP_NTZ on
@@ -46,7 +47,10 @@ from nchu_bigdata_spark.queries.streaming_batch import (
 # source needs the schema up front, so ``_probe_ts_type`` batch-reads
 # the path's footer once (schema only, no data job) and the decode
 # branch normalizes to microsecond TimestampType — same policy as
-# ``nchu_bigdata_spark.io.table``.
+# ``nchu_bigdata_spark.io.table``. Every public runner below runs in its
+# own pinned child session (``session.query_session``): the NTZ decode
+# resolves against that session's UTC clock whatever the caller's TZ,
+# and the caller's session is never written.
 
 
 #: Telemetry from the most recent streaming run in this process: the
@@ -129,7 +133,7 @@ def _decode_ts(raw: DataFrame) -> DataFrame:
 def events_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming scan of an events parquet path (file or directory
     glob), decoded to the engine's canonical events schema."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = query_session(spark)
     schema = _events_raw_schema(_probe_ts_type(spark, path))
     raw = spark.readStream.schema(schema).parquet(path)
     return _decode_ts(raw)
@@ -149,36 +153,21 @@ def run_events_stream_to_parquet(
     files are not reprocessed, so the sink stays exactly-once across
     restarts (asserted by the recovery test). Drains available input
     (AvailableNow) and returns when the query stops."""
-    # Pin the session clock BEFORE the schema probe: when the source
-    # surfaces ts as TIMESTAMP_NTZ, _decode_ts's NTZ->Timestamp cast
-    # resolves against the session TZ, so a hostile caller default would
-    # otherwise write shifted instants to the parquet sink. The pin is
-    # scoped to this call: AvailableNow blocks until the sink drains, so
-    # the caller's TZ is restored before control returns and their
-    # subsequent TZ-sensitive queries keep their own semantics.
-    tz_key = "spark.sql.session.timeZone"
-    prev_tz = spark.conf.get(tz_key, None)
-    spark.conf.set(tz_key, "UTC")
-    try:
-        src = spark.readStream.schema(_events_raw_schema(_probe_ts_type(spark, path)))
-        if max_files_per_trigger is not None:
-            src = src.option("maxFilesPerTrigger", max_files_per_trigger)
-        df = transform(_decode_ts(src.parquet(path)))
-        q = (
-            df.writeStream.format("parquet")
-            .option("path", sink_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _capture_progress(q)
-    finally:
-        if prev_tz is None:
-            spark.conf.unset(tz_key)
-        else:
-            spark.conf.set(tz_key, prev_tz)
+    spark = query_session(spark)
+    src = spark.readStream.schema(_events_raw_schema(_probe_ts_type(spark, path)))
+    if max_files_per_trigger is not None:
+        src = src.option("maxFilesPerTrigger", max_files_per_trigger)
+    df = transform(_decode_ts(src.parquet(path)))
+    q = (
+        df.writeStream.format("parquet")
+        .option("path", sink_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    _capture_progress(q)
 
 
 def run_events_stream(
@@ -196,7 +185,7 @@ def run_events_stream(
     microbatches — used by tests to advance the watermark between
     batches and observe late-data drops."""
     name = f"stream_result_{uuid4().hex[:12]}"
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = query_session(spark)
     src = spark.readStream.schema(_events_raw_schema(_probe_ts_type(spark, path)))
     if max_files_per_trigger is not None:
         src = src.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -228,7 +217,7 @@ def run_events_stream_to_noop(
     like bench.py's batch noop rationale. Progress telemetry still
     lands in ``last_run_progress`` so state-store size and row counts
     are observable without materializing rows."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = query_session(spark)
     src = spark.readStream.schema(_events_raw_schema(_probe_ts_type(spark, path)))
     if max_files_per_trigger is not None:
         src = src.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -279,6 +268,7 @@ def run_events_cdc_upsert(
     import os
     import shutil
 
+    spark = query_session(spark)
     shutil.rmtree(target_root, ignore_errors=True)
     os.makedirs(target_root, exist_ok=True)
     gens = [os.path.join(target_root, f"gen{i}") for i in (0, 1)]
@@ -328,24 +318,15 @@ def run_events_cdc_upsert(
     src = spark.readStream.schema(_events_raw_schema(_probe_ts_type(spark, path)))
     if max_files_per_trigger is not None:
         src = src.option("maxFilesPerTrigger", max_files_per_trigger)
-    tz_key = "spark.sql.session.timeZone"
-    prev_tz = spark.conf.get(tz_key, None)
-    spark.conf.set(tz_key, "UTC")
-    try:
-        q = (
-            _decode_ts(src.parquet(path))
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _capture_progress(q)
-    finally:
-        if prev_tz is None:
-            spark.conf.unset(tz_key)
-        else:
-            spark.conf.set(tz_key, prev_tz)
+    q = (
+        _decode_ts(src.parquet(path))
+        .writeStream.foreachBatch(merge)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    _capture_progress(q)
     if live["cur"] < 0:  # no input at all
         return spark.createDataFrame(
             [],

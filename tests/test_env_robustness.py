@@ -54,3 +54,28 @@ def test_result_invariant_under_hostile_runtime(name, spark, sf_dir):
             else:
                 spark.conf.set(k, v)
     assert hostile == baseline and len(baseline) > 0
+
+
+def test_query_session_inherits_tuning_pins_engine_confs_and_isolates(spark):
+    """The per-query child session keeps the caller's runtime tuning
+    (the hostile shuffle width above reaches the query — a fresh
+    ``newSession`` would silently drop it), carries every engine pin
+    over a hostile caller value, and writes nothing back."""
+    from nchu_bigdata_spark.session import QUERY_CONF_PINS, query_session
+
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "3")
+    caller.conf.set("spark.sql.session.timeZone", "America/New_York")
+    caller.conf.set("spark.sql.ansi.enabled", "true")
+    caller.range(1).createOrReplaceTempView("caller_v")
+    before = caller.conf.getAll
+
+    child = query_session(caller)
+    assert child.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert {k: child.conf.get(k) for k in QUERY_CONF_PINS} == QUERY_CONF_PINS
+    assert child.catalog.tableExists("caller_v")  # cloned, not fresh
+
+    child.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    child.range(1).createOrReplaceTempView("child_v")
+    assert caller.conf.getAll == before
+    assert not caller.catalog.tableExists("child_v")

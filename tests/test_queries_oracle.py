@@ -1,7 +1,15 @@
 """Differential test: every registered query with an oracle must match
 DuckDB exactly (strict multiset equality — stricter than the driver's
 value hash). Rows-only queries must at least run and return a stable
-schema."""
+schema.
+
+Both sweeps call each query from one hostile caller session — a
+timezone far from UTC (every TZ-sensitive query, fn_date's
+to_date/year/dayofweek buckets first among them), ANSI on (Spark 4's
+default; agg_hash's decimal aggregation under it) and a broadcast
+threshold the engine never uses — so every result is checked against
+its oracle under caller defaults the query must not depend on, and the
+caller's conf and temp views must come back untouched."""
 
 from __future__ import annotations
 
@@ -16,20 +24,48 @@ ORACLE_IDS = sorted(n for n, s in SPECS.items() if s.oracle)
 ROWS_ONLY_IDS = sorted(n for n, s in SPECS.items() if not s.oracle)
 
 
+HOSTILE_CALLER_CONF = {
+    "spark.sql.session.timeZone": "America/New_York",
+    "spark.sql.ansi.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": "12345",
+}
+
+
+@pytest.fixture(scope="module")
+def caller(spark):
+    s = spark.newSession()
+    for k, v in HOSTILE_CALLER_CONF.items():
+        s.conf.set(k, v)
+    return s
+
+
+def _caller_state(caller):
+    # Temp views only: join_bucketed's bucketed tables live in the
+    # shared catalog on purpose (written once, reused by later runs).
+    return (
+        caller.conf.getAll,
+        sorted(t.name for t in caller.catalog.listTables() if t.isTemporary),
+    )
+
+
 @pytest.mark.parametrize("name", ORACLE_IDS)
-def test_query_matches_oracle(name, spark, duck, sf_dir):
+def test_query_matches_oracle(name, caller, duck, sf_dir):
     spec = SPECS[name]
-    sdf = spec.fn(spark, sf_dir)
+    before = _caller_state(caller)
+    sdf = spec.fn(caller, sf_dir)
     assert_df_matches_oracle(sdf, duck, spec.oracle, name)
+    assert _caller_state(caller) == before, f"{name}: mutated the caller"
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_IDS)
-def test_rows_only_query_runs(name, spark, sf_dir):
+def test_rows_only_query_runs(name, caller, sf_dir):
     spec = SPECS[name]
-    df = spec.fn(spark, sf_dir)
+    before = _caller_state(caller)
+    df = spec.fn(caller, sf_dir)
     assert df.columns, f"{name}: no columns"
     n = df.count()
     assert n >= 0
+    assert _caller_state(caller) == before, f"{name}: mutated the caller"
 
 
 def test_agg_approx_verdicts_and_raw_sketch_bounds(spark, sf_dir):
@@ -110,26 +146,6 @@ def test_contract_shape():
     o = entrymod.oracle_sql()
     assert set(o) <= set(q)
     assert len(q) >= 1
-
-
-def test_queries_immune_to_caller_session_defaults(spark, sf_dir):
-    """Registered queries pin UTC/ANSI-off/Arrow-on at invocation
-    (registry.final_fn), so a caller session with hostile defaults —
-    Spark 4 ships ANSI on; a driver box may sit in any timezone — must
-    produce byte-identical results to the engine's own session. fn_date
-    is the most TZ-sensitive query (to_date/year/dayofweek buckets);
-    agg_hash covers decimal aggregation under ANSI."""
-    from tests.helpers import canon_rows
-
-    hostile = spark.newSession()
-    hostile.conf.set("spark.sql.ansi.enabled", "true")
-    hostile.conf.set("spark.sql.session.timeZone", "Asia/Taipei")
-    for name in ("fn_date", "agg_hash"):
-        base = SPECS[name].fn(spark, sf_dir)
-        other = SPECS[name].fn(hostile, sf_dir)
-        rows_a = canon_rows(base.columns, [tuple(r) for r in base.collect()])
-        rows_b = canon_rows(other.columns, [tuple(r) for r in other.collect()])
-        assert rows_a == rows_b, name
 
 
 def test_driver_order_covers_registry_exactly():

@@ -1004,8 +1004,9 @@ def test_udtf_lateral_row_multiplication_contract(spark, sf_dir, duck):
     """Total rows the UDTF emits across the corpus equals
     sum(n_tokens - 1) exactly (nothing dropped or doubled), and a
     single-token input yields zero rows without error."""
-    SPECS["udtf_lateral_python"].fn(spark, sf_dir).collect()  # registers
-    total = spark.sql(
+    # the view and the UDTF are registered on the query's own session
+    qs = SPECS["udtf_lateral_python"].fn(spark, sf_dir).sparkSession
+    total = qs.sql(
         "SELECT COUNT(*) AS n FROM udtf_docs_v d,"
         " LATERAL doc_bigrams(d.text) t"
     ).collect()[0].n
@@ -1014,7 +1015,7 @@ def test_udtf_lateral_row_multiplication_contract(spark, sf_dir, duck):
     ).fetchone()
     assert total == exp
     assert (
-        spark.sql(
+        qs.sql(
             "SELECT t.w FROM VALUES ('single') AS v(s),"
             " LATERAL doc_bigrams(s) t"
         ).count()

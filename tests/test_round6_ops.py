@@ -298,21 +298,19 @@ def test_embed_quantize_matches_python(spark, tmp_path_factory, vecs):
 
 
 def test_bloom_prune_injects_and_confs_stay_scoped(spark, sf_dir):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    caller_threshold = spark.conf.get(key)
     df = SPECS["join_bloom_prune"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "might_contain" in plan and "bloom_filter_agg" in plan
     assert "BroadcastHashJoin" not in plan
-    # the override is live for THIS query's lazy execution...
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
-    # ...and the registry wrapper re-pins the engine's declared values
-    # on entry to the next query, whose dim join must broadcast again
-    from nchu_bigdata_spark.session import PLAN_CONF_PINS
-
+    # the override is live on THIS query's own session, for its lazy
+    # execution...
+    assert df.sparkSession.conf.get(key) == "-1"
+    # ...and never reaches the caller, so the next query's dim join
+    # broadcasts again
+    assert spark.conf.get(key) == caller_threshold
     df2 = SPECS["join_broadcast"].fn(spark, sf_dir)
-    assert (
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        == PLAN_CONF_PINS["spark.sql.autoBroadcastJoinThreshold"]
-    )
     assert "BroadcastHashJoin" in df2._jdf.queryExecution().executedPlan().toString()
 
 

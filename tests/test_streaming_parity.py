@@ -251,12 +251,13 @@ def test_failed_events_read_does_not_leak_nanos_conf(spark, tmp_path):
 
 
 def test_parquet_sink_immune_to_hostile_session_tz(spark, sf_dir, tmp_path):
-    """The parquet sink path must pin UTC itself: the real events
-    parquet surfaces ts as TIMESTAMP_NTZ on Spark 4.x, and the
+    """The parquet sink path must run on a UTC clock itself: the real
+    events parquet surfaces ts as TIMESTAMP_NTZ on Spark 4.x, and the
     NTZ→Timestamp decode resolves against the session clock — under a
     hostile caller TZ an unpinned run writes shifted instants to the
     sink. Compare instants (unix_micros, session-TZ-independent)
-    against the batch reader, which pins UTC internally."""
+    against the batch reader on the engine's UTC session, and check
+    the caller's TZ is left as the caller set it."""
     from pyspark.sql import functions as F
 
     from nchu_bigdata_spark.io import table
@@ -280,6 +281,8 @@ def test_parquet_sink_immune_to_hostile_session_tz(spark, sf_dir, tmp_path):
             str(tmp_path / "sink"),
             str(tmp_path / "ckpt"),
         )
+        # the runner's UTC clock lives on its own child session
+        assert spark.conf.get("spark.sql.session.timeZone") == "Asia/Taipei"
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     got = {
